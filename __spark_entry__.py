@@ -4189,8 +4189,7 @@ def _hits_oracle(iters: int = 2) -> str:
     )
 
 
-
-# ---- round-2 curation/dedup additions
+# ---- curation/dedup
 
 
 def q_semdedup(spark: SparkSession, sf: str) -> DataFrame:
@@ -10066,31 +10065,6 @@ def q_relative_risk(spark: SparkSession, sf: str) -> DataFrame:
     return relative_risk(docs, "long_doc", "is_en")
 
 
-
-# Head of the returned registry = the driver gate's 50-entry coverage
-# window; queries() promotes these names to the front of the (otherwise
-# stable) registry order, so each round's rotation is a one-list edit.
-# Round-7 rotation CLOSES 100% cumulative driver coverage: positions
-# 1-2 re-gate q_array_funcs / q_map_funcs, the round-6 reds — their
-# array/map outputs are now serialized to CSV strings (array_join /
-# string_agg twins) so the driver's pandas canonicalizer can sort and
-# hash them; a schema sweep confirmed no other query emits a
-# list/map/struct output column. Positions 3-48 are ALL 46 remaining
-# never-driver-gated queries from the round-6 backlog (round-6 verdict
-# item 2), including the rows-only q_compression_ratio. Positions
-# 49-50 re-gate q_assoc_rules (Apriori item-frequency prune added —
-# round-6 verdict item 3's done criterion requires it driver-green
-# bit-identical) and q_auc (pair-count arithmetic moved to
-# DECIMAL(38,0) + the quantize guard at the call site). Round-8 gate
-# backlog, in priority order: the seven NEW round-7 queries
-# q_image_dhash, q_ann_range, q_bh_fdr, q_leakage_split,
-# q_token_budget, q_canonical_dedup, q_join_delta (all oracle-checked
-# in the local sweep this round), then the lower-risk changed-code re-gates
-# q_reliability (score sum now accumulates in DECIMAL(38,0)),
-# q_fuzzy_names and q_entity_resolution (fuzzy_pairs gained the
-# pair_source branch; the default path is plan-identical and was
-# re-verified bit-identical vs oracle at sf0.01 this round).
-# scripts/oracle_sweep.py still checks every entry locally each round.
 def q_paragraph_neardup(spark: SparkSession, sf: str) -> DataFrame:
     # Paragraph-grain MinHash+LSH near-dup (dedup.paragraph_neardup_pairs
     # — the Dolma/CCNet sub-document pass; dedup_lines catches only
@@ -10150,15 +10124,8 @@ def q_contamination_matrix(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Round-10 rotation: see the in-list comments below.
+# The contract gate checks the first 50 registry names; these lead queries().
 _GATE_HEAD = [
-    # round-10 rotation (round-9 verdict item 1): positions 1-25 are
-    # the ENTIRE never-driver-gated backlog — q_compression_ratio's
-    # first green (partial DuckDB oracle landed round 9, retiring the
-    # perpetual err:no_oracle), q_ppm_zlib_decode (new round 9), then
-    # the 23-query statistics tail of the round-8 wave. After these
-    # gate green, every registry query has a lifetime green row — the
-    # strict 426/426 bar — for the first time in project history.
     "q_compression_ratio",
     "q_ppm_zlib_decode",
     "q_rolling_quantile",
@@ -10184,24 +10151,11 @@ _GATE_HEAD = [
     "q_two_prop_z",
     "q_gini_split",
     "q_relative_risk",
-    # Positions 26-30: re-gates of code paths round 9/10 touched
-    # (round-9 verdict item 1): the ANN lifecycle pair (build write
-    # path gained cluster-on-cell in r9 and sqrt(N) self-sizing in
-    # r10), q_image_dhash (codec dispatch became a dict in r9),
-    # q_hurst (distributed_index branch + r10 unpersist fix),
-    # q_dbscan_grid (observations arm).
     "q_ann_prebuilt",
     "q_ann_assign_delta",
     "q_image_dhash",
     "q_hurst",
     "q_dbscan_grid",
-    # Positions 31-47: freshness re-gates — 17 queries whose only
-    # green row is round 1 (core scan/agg/set/window/ANN surface has
-    # not been re-gated since; scripts/oracle_sweep.py has re-checked
-    # them every round, but a driver row is the stricter record).
-    # Positions 48-50: the three NEW round-10 queries (paragraph-grain
-    # LSH, match-length histogram, contamination matrix), gated in
-    # their landing round per the round-9 verdict item 6.
     "q_ann_bruteforce",
     "q_ann_lsh",
     "q_minhash_lsh",
@@ -10226,445 +10180,10 @@ _GATE_HEAD = [
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    reg = {
-        "q_mad_outliers": q_mad_outliers,
-        "q_wilson_ctr": q_wilson_ctr,
-        "q_mst_distributed": q_mst_distributed,
-        "q_substring_dedup": q_substring_dedup,
-        "q_adamic_adar": q_adamic_adar,
-        "q_interp_linear": q_interp_linear,
-        "q_acf": q_acf,
-        "q_asof_nearest": q_asof_nearest,
-        "q_clustering_coeff": q_clustering_coeff,
-        "q_l_diversity": q_l_diversity,
-        "q_event_motif": q_event_motif,
-        "q_pca_pc1": q_pca_pc1,
-        "q_markov_attribution": q_markov_attribution,
-        "q_hll_sliding": q_hll_sliding,
-        "q_embed_covariance": q_embed_covariance,
-        "q_text_quality": q_text_quality,
-        "q_gopher_quality": q_gopher_quality,
-        "q_embed_decontaminate": q_embed_decontaminate,
-        "q_geo_radius_join": q_geo_radius_join,
-        "q_dsir_weights": q_dsir_weights,
-        "q_conversion_funnel": q_conversion_funnel,
-        "q_retention_cohorts": q_retention_cohorts,
-        "q_token_count": q_token_count,
-        "q_lang_id": q_lang_id,
-        "q_fingerprint": q_fingerprint,
-        "q_tfidf": q_tfidf,
-        "q_decontaminate": q_decontaminate,
-        "q_line_dedup": q_line_dedup,
-        "q_lm_score": q_lm_score,
-        "q_order_priority": q_order_priority,
-        "q_customer_distribution": q_customer_distribution,
-        "q_theta_diff": q_theta_diff,
-        "q_naive_bayes": q_naive_bayes,
-        "q_interval_merge": q_interval_merge,
-        "q_stream_dedup": q_stream_dedup,
-        "q_interval_join": q_interval_join,
-        "q_label_propagation": q_label_propagation,
-        "q_sparse_cosine": q_sparse_cosine,
-        "q_winsorize": q_winsorize,
-        "q_mst_boruvka": q_mst_boruvka,
-        "q_pipe_syntax": q_pipe_syntax,
-        "q_recursive_cte": q_recursive_cte,
-        "q_ohlc_bars": q_ohlc_bars,
-        "q_multimodal_patches": q_multimodal_patches,
-        "q_centroid_matrix": q_centroid_matrix,
-        "q_holt_forecast": q_holt_forecast,
-        "q_geohash": q_geohash,
-        "q_theilsen": q_theilsen,
-        "q_zonemap_prune": q_zonemap_prune,
-        "q_bootstrap_ci": q_bootstrap_ci,
-        "q_incremental_agg": q_incremental_agg,
-        "q_quantile_normalize": q_quantile_normalize,
-        "q_kfold_loo": q_kfold_loo,
-        "q_k_anonymity": q_k_anonymity,
-        "q_term_kl_drift": q_term_kl_drift,
-        "q_lttb_downsample": q_lttb_downsample,
-        # --- added late in round 4 (never gated): round-5 rotation
-        # candidates, sweep-checked locally like everything else.
-        "q_hits": q_hits,
-        "q_vocab_growth": q_vocab_growth,
-        "q_dwell_time": q_dwell_time,
-        "q_supplier_hindex": q_supplier_hindex,
-        "q_cdc_chunks": q_cdc_chunks,
-        "q_repetition_stats": q_repetition_stats,
-        "q_dp_histogram": q_dp_histogram,
-        "q_bucket_diff": q_bucket_diff,
-        "q_fuzzy_names": q_fuzzy_names,
-        "q_scene_changes": q_scene_changes,
-        "q_twap": q_twap,
-        "q_burst_detect": q_burst_detect,
-        "q_sssp": q_sssp,
-        "q_weighted_topk_sample": q_weighted_topk_sample,
-        "q_kcenter": q_kcenter,
-        # --- driver-green in r1-r3 or sweep-checked; the full local
-        # sweep covers all of them every round.
-        "q_benford": q_benford,
-        "q_welch_ttest": q_welch_ttest,
-        "q_mannwhitney": q_mannwhitney,
-        "q_ks_test": q_ks_test,
-        "q_chisq_independence": q_chisq_independence,
-        "q_runs_test": q_runs_test,
-        "q_gini": q_gini,
-        "q_poisson_anomaly": q_poisson_anomaly,
-        "q_pareto_point": q_pareto_point,
-        "q_abtest_srm": q_abtest_srm,
-        "q_psi_drift": q_psi_drift,
-        "q_mutual_info": q_mutual_info,
-        "q_kaplan_meier": q_kaplan_meier,
-        "q_weighted_median": q_weighted_median,
-        "q_decile_grid": q_decile_grid,
-        "q_corr_stats": q_corr_stats,
-        "q_kcore": q_kcore,
-        "q_bfs_hops": q_bfs_hops,
-        "q_countmin": q_countmin,
-        "q_hll": q_hll,
-        "q_hll_overlap": q_hll_overlap,
-        "q_join_cardinality": q_join_cardinality,
-        "q_bitmap_distinct": q_bitmap_distinct,
-        "q_heavy_hitters": q_heavy_hitters,
-        "q_approx_distinct": q_approx_distinct,
-        "q_regional_revenue": q_regional_revenue,
-        "q_volume_shipping": q_volume_shipping,
-        "q_market_share": q_market_share,
-        "q_product_profit": q_product_profit,
-        "q_returned_revenue": q_returned_revenue,
-        "q_important_stock": q_important_stock,
-        "q_shipmode_priority": q_shipmode_priority,
-        "q_promo_revenue": q_promo_revenue,
-        "q_top_supplier": q_top_supplier,
-        "q_small_qty_revenue": q_small_qty_revenue,
-        "q_large_orders": q_large_orders,
-        "q_disjunctive_pred": q_disjunctive_pred,
-        "q_idle_customers": q_idle_customers,
-        "q_multimodal_frames": q_multimodal_frames,
-        "q_multimodal_resize": q_multimodal_resize,
-        "q_multimodal_ppm": q_multimodal_ppm,
-        "q_bitwise_agg": q_bitwise_agg,
-        "q_zorder": q_zorder,
-        "q_udtf_sentences": q_udtf_sentences,
-        "q_attribution": q_attribution,
-        "q_sorted_neighborhood": q_sorted_neighborhood,
-        "q_linkage_score": q_linkage_score,
-        "q_bpe_apply": q_bpe_apply,
-        "q_kmeans": q_kmeans,
-        "q_compression_ratio": q_compression_ratio,
-        "q_simhash": q_simhash,
-        "q_embed_neardup": q_embed_neardup,
-        "q_ngram_jaccard": q_ngram_jaccard,
-        "q_dedup_clusters": q_dedup_clusters,
-        "q_pagerank": q_pagerank,
-        "q_bloom_prefilter": q_bloom_prefilter,
-        "q_grid_quantiles": q_grid_quantiles,
-        "q_asof_join": q_asof_join,
-        "q_stratified_sample": q_stratified_sample,
-        "q_multimodal_features": q_multimodal_features,
-        "q_table_checksum": q_table_checksum,
-        "q_semdedup": q_semdedup,
-        "q_minhash_est": q_minhash_est,
-        "q_quality_weights": q_quality_weights,
-        "q_source_cap": q_source_cap,
-        "q_cross_corpus": q_cross_corpus,
-        "q_word_entropy": q_word_entropy,
-        "q_global_rank": q_global_rank,
-        "q_winnow_pairs": q_winnow_pairs,
-        "q_ann_sq8": q_ann_sq8,
-        "q_ann_pq": q_ann_pq,
-        "q_ann_ivf_pq": q_ann_ivf_pq,
-        "q_hard_negatives": q_hard_negatives,
-        "q_ann_recall_report": q_ann_recall_report,
-        "q_ann_multiprobe": q_ann_multiprobe,
-        "q_entity_resolution": q_entity_resolution,
-        "q_textrank": q_textrank,
-        "q_auc": q_auc,
-        "q_audio_segments": q_audio_segments,
-        "q_skew_report": q_skew_report,
-        "q_ivf_cells": q_ivf_cells,
-        "q_coreness": q_coreness,
-        "q_minhash_calibration": q_minhash_calibration,
-        "q_assoc_rules": q_assoc_rules,
-        "q_reliability": q_reliability,
-        "q_pr_curve": q_pr_curve,
-        "q_cuped": q_cuped,
-        "q_keyframes": q_keyframes,
-        "q_pmi_bigrams": q_pmi_bigrams,
-        "q_skyline": q_skyline,
-        "q_bucketed_join": q_bucketed_join,
-        "q_percentile_cont": q_percentile_cont,
-        "q_session_native": q_session_native,
-        "q_triangles": q_triangles,
-        "q_regexp_extract_all": q_regexp_extract_all,
-        "q_compaction": q_compaction,
-        "q_schema_evolution": q_schema_evolution,
-        "q_cdc_apply": q_cdc_apply,
-        "q_from_json": q_from_json,
-        "q_pandas_udf": q_pandas_udf,
-        "q_cogroup": q_cogroup,
-        "q_nullsafe_join": q_nullsafe_join,
-        "q_ewma": q_ewma,
-        "q_cumulative_distinct": q_cumulative_distinct,
-        "q_haversine": q_haversine,
-        "q_bm25": q_bm25,
-        "q_rrf_fusion": q_rrf_fusion,
-        "q_variant": q_variant,
-        "q_collation": q_collation,
-        "q_copurchase": q_copurchase,
-        "q_grouped_linreg": q_grouped_linreg,
-        "q_degree_dist": q_degree_dist,
-        "q_containment": q_containment,
-        "q_bpe_pairs": q_bpe_pairs,
-        "q_multimodal_rms": q_multimodal_rms,
-        "q_ppjoin": q_ppjoin,
-        "q_rolling_slope": q_rolling_slope,
-        "q_woe_binning": q_woe_binning,
-        "q_feature_hash": q_feature_hash,
-        "q_ngram_lm": q_ngram_lm,
-        "q_simhash_pairs": q_simhash_pairs,
-        "q_rfm_segments": q_rfm_segments,
-        "q_concurrency": q_concurrency,
-        "q_markov_transitions": q_markov_transitions,
-        "q_survivorship": q_survivorship,
-        "q_grouping_id": q_grouping_id,
-        "q_mmr_rerank": q_mmr_rerank,
-        "q_revenue_spread": q_revenue_spread,
-        "q_seasonal_decompose": q_seasonal_decompose,
-        "q_changepoint": q_changepoint,
-        "q_session_paths": q_session_paths,
-        "q_grid_density": q_grid_density,
-        "q_lateral_topk": q_lateral_topk,
-        "q_source_similarity": q_source_similarity,
-        "q_salted_join": q_salted_join,
-        "q_mix_temperature": q_mix_temperature,
-        "q_scd2_history": q_scd2_history,
-        "q_dedup_normalized": q_dedup_normalized,
-        "q_length_histogram": q_length_histogram,
-        "q_sliding_window": q_sliding_window,
-        "q_dup_ngram": q_dup_ngram,
-        "q_cluster_sizes": q_cluster_sizes,
-        "q_split_assign": q_split_assign,
-        "q_events_window": q_events_window,
-        "q_winnow_fingerprint": q_winnow_fingerprint,
-        "q_profile_table": q_profile_table,
-        "q_corpus_yield": q_corpus_yield,
-        "q_higher_order": q_higher_order,
-        "q_quantile_filter": q_quantile_filter,
-        "q_dup_rate_by_source": q_dup_rate_by_source,
-        "q_embed_centroid": q_embed_centroid,
-        "q_sessionize": q_sessionize,
-        "q_range_join": q_range_join,
-        "q_yoy_growth": q_yoy_growth,
-        "q_ratio_to_report": q_ratio_to_report,
-        "q_bigrams": q_bigrams,
-        "q_repetition_ratio": q_repetition_ratio,
-        "q_pii_scrub": q_pii_scrub,
-        "q_mix_epochs": q_mix_epochs,
-        "q_chunk_documents": q_chunk_documents,
-        "q_resample_ffill": q_resample_ffill,
-        "q_time_weighted": q_time_weighted,
-        "q_date_spine": q_date_spine,
-        "q_weighted_sample": q_weighted_sample,
-        "q_pack_sequences": q_pack_sequences,
-        "q_scalar_subquery": q_scalar_subquery,
-        "q_funnel": q_funnel,
-        "q_cohort_retention": q_cohort_retention,
-        "q_grouping_sets": q_grouping_sets,
-        "q_lag_lead": q_lag_lead,
-        "q_ntile": q_ntile,
-        "q_histogram": q_histogram,
-        "q_quality_report": q_quality_report,
-        "q_array_funcs": q_array_funcs,
-        "q_group_normalize": q_group_normalize,
-        "q_rank_dense": q_rank_dense,
-        "q_cross_join": q_cross_join,
-        "q_keyset_pagination": q_keyset_pagination,
-        "q_minmax_by": q_minmax_by,
-        "q_window_firstlast": q_window_firstlast,
-        "q_mode": q_mode,
-        "q_snapshot_diff": q_snapshot_diff,
-        "q_rolling_range": q_rolling_range,
-        "q_partition_prune": q_partition_prune,
-        "q_waiting_suppliers": q_waiting_suppliers,
-        "q_min_cost_supplier": q_min_cost_supplier,
-        "q_json_roundtrip": q_json_roundtrip,
-        "q_orc_roundtrip": q_orc_roundtrip,
-        "q_percent_rank": q_percent_rank,
-        "q_date_arith": q_date_arith,
-        "q_string_agg": q_string_agg,
-        "q_unpivot": q_unpivot,
-        "q_map_funcs": q_map_funcs,
-        "q_window_distinct": q_window_distinct,
-        "q_forecast_revenue": q_forecast_revenue,
-        "q_parts_supplier": q_parts_supplier,
-        "q_potential_promotion": q_potential_promotion,
-        "q_geo_point_parse": q_geo_point_parse,
-        "q_csv_malformed": q_csv_malformed,
-        "q_fuzzy_match": q_fuzzy_match,
-        "q_bool_agg": q_bool_agg,
-        "q_posexplode": q_posexplode,
-        "q_merge_upsert": q_merge_upsert,
-        "q_moving_avg": q_moving_avg,
-        "q_try_arithmetic": q_try_arithmetic,
-        "q_set_ops_all": q_set_ops_all,
-        "q_gaps_islands": q_gaps_islands,
-        "q_scan_parquet": q_scan_parquet,
-        "q_csv_roundtrip": q_csv_roundtrip,
-        "q_project": q_project,
-        "q_filter_between": q_filter_between,
-        "q_filter_notnull": q_filter_notnull,
-        "q_limit": q_limit,
-        "q_count": q_count,
-        "q_cast_ts": q_cast_ts,
-        "q_cast_num": q_cast_num,
-        "q_fillna": q_fillna,
-        "q_date_dim": q_date_dim,
-        "q_distinct_dim": q_distinct_dim,
-        "q_dedup_key": q_dedup_key,
-        "q_dedup_rank": q_dedup_rank,
-        "q_pk_check": q_pk_check,
-        "q_fk_antijoin": q_fk_antijoin,
-        "q_fk_violations": q_fk_violations,
-        "q_groupby_agg": q_groupby_agg,
-        "q_star_join": q_star_join,
-        "q_semijoin": q_semijoin,
-        "q_set_union": q_set_union,
-        "q_set_intersect": q_set_intersect,
-        "q_set_except": q_set_except,
-        "q_topk_pergroup": q_topk_pergroup,
-        "q_window_running": q_window_running,
-        "q_cube": q_cube,
-        "q_rollup": q_rollup,
-        "q_rollup_year": q_rollup_year,
-        "q_vector_stats": q_vector_stats,
-        "q_null_semantics": q_null_semantics,
-        "q_exists_agg": q_exists_agg,
-        "q_outer_count_dist": q_outer_count_dist,
-        "q_offset": q_offset,
-        "q_percentiles": q_percentiles,
-        "q_count_distinct": q_count_distinct,
-        "q_stats_agg": q_stats_agg,
-        "q_wordcount": q_wordcount,
-        "q_pivot": q_pivot,
-        "q_shipping_priority": q_shipping_priority,
-        "q_conditional_agg": q_conditional_agg,
-        "q_string_funcs": q_string_funcs,
-        "q_json_extract": q_json_extract,
-        "q_socrata_scan": q_socrata_scan,
-        "q_upsert": q_upsert,
-        "q_dedup_exact": q_dedup_exact,
-        "q_minhash_lsh": q_minhash_lsh,
-        "q_ann_bruteforce": q_ann_bruteforce,
-        "q_ann_lsh": q_ann_lsh,
-        "q_ann_ivf": q_ann_ivf,
-        "q_apply_in_arrow": q_apply_in_arrow,
-        "q_spearman": q_spearman,
-        "q_anova": q_anova,
-        "q_ccf": q_ccf,
-        "q_stream_attribution": q_stream_attribution,
-        "q_cdc_microbatch": q_cdc_microbatch,
-        "q_personalized_pagerank": q_personalized_pagerank,
-        "q_ann_range": q_ann_range,
-        "q_image_dhash": q_image_dhash,
-        "q_ppm_zlib_decode": q_ppm_zlib_decode,
-        "q_bh_fdr": q_bh_fdr,
-        "q_leakage_split": q_leakage_split,
-        "q_token_budget": q_token_budget,
-        "q_canonical_dedup": q_canonical_dedup,
-        "q_join_delta": q_join_delta,
-        "q_ann_prebuilt": q_ann_prebuilt,
-        "q_ann_assign_delta": q_ann_assign_delta,
-        "q_zipf_slope": q_zipf_slope,
-        "q_ngram_novelty": q_ngram_novelty,
-        "q_spearman_global": q_spearman_global,
-        "q_mann_whitney": q_mann_whitney,
-        "q_ks_drift": q_ks_drift,
-        "q_chi2_source_lang": q_chi2_source_lang,
-        "q_gini_chars": q_gini_chars,
-        "q_dup_rate_curve": q_dup_rate_curve,
-        "q_interleave_order": q_interleave_order,
-        "q_kruskal_wallis": q_kruskal_wallis,
-        "q_anova_f": q_anova_f,
-        "q_levene": q_levene,
-        "q_silhouette": q_silhouette,
-        "q_readability": q_readability,
-        "q_rake_keywords": q_rake_keywords,
-        "q_jsd_drift": q_jsd_drift,
-        "q_friedman": q_friedman,
-        "q_ndcg": q_ndcg,
-        "q_dbscan_grid": q_dbscan_grid,
-        "q_t_closeness": q_t_closeness,
-        "q_harmonic_centrality": q_harmonic_centrality,
-        "q_assortativity": q_assortativity,
-        "q_modularity": q_modularity,
-        "q_cohens_kappa": q_cohens_kappa,
-        "q_mcc": q_mcc,
-        "q_theil_u": q_theil_u,
-        "q_drawdown": q_drawdown,
-        "q_decayed_topk": q_decayed_topk,
-        "q_cronbach": q_cronbach,
-        "q_dedup_cascade": q_dedup_cascade,
-        "q_sax_words": q_sax_words,
-        "q_lift_table": q_lift_table,
-        "q_ece": q_ece,
-        "q_oov_rate": q_oov_rate,
-        "q_moments": q_moments,
-        "q_mantel_haenszel": q_mantel_haenszel,
-        "q_ljung_box": q_ljung_box,
-        "q_lorenz": q_lorenz,
-        "q_logrank": q_logrank,
-        "q_by_fdr": q_by_fdr,
-        "q_lsh_plan": q_lsh_plan,
-        "q_kendall_tau": q_kendall_tau,
-        "q_wasserstein": q_wasserstein,
-        "q_effect_sizes": q_effect_sizes,
-        "q_cochran_armitage": q_cochran_armitage,
-        "q_mcnemar": q_mcnemar,
-        "q_durbin_watson": q_durbin_watson,
-        "q_target_encode": q_target_encode,
-        "q_randomization_test": q_randomization_test,
-        "q_dp_mean": q_dp_mean,
-        "q_neighbor_jaccard": q_neighbor_jaccard,
-        "q_map_mrr": q_map_mrr,
-        "q_holm": q_holm,
-        "q_audio_zcr": q_audio_zcr,
-        "q_hurst": q_hurst,
-        "q_isotonic": q_isotonic,
-        "q_quadratic_fit": q_quadratic_fit,
-        "q_auc_delong": q_auc_delong,
-        "q_stratified_kfold": q_stratified_kfold,
-        "q_rolling_quantile": q_rolling_quantile,
-        "q_script_profile": q_script_profile,
-        "q_diff_in_diff": q_diff_in_diff,
-        "q_ngram_coverage": q_ngram_coverage,
-        "q_hill_tail": q_hill_tail,
-        "q_ams_f2": q_ams_f2,
-        "q_ktruss": q_ktruss,
-        "q_preference_pairs": q_preference_pairs,
-        "q_truncated_recall": q_truncated_recall,
-        "q_sprt": q_sprt,
-        "q_forecast_backtest": q_forecast_backtest,
-        "q_best_f1": q_best_f1,
-        "q_betweenness": q_betweenness,
-        "q_negative_sampling": q_negative_sampling,
-        "q_log_odds": q_log_odds,
-        "q_rolling_anomaly": q_rolling_anomaly,
-        "q_conformal": q_conformal,
-        "q_ucb_ranking": q_ucb_ranking,
-        "q_knee_point": q_knee_point,
-        "q_mde_power": q_mde_power,
-        "q_two_prop_z": q_two_prop_z,
-        "q_gini_split": q_gini_split,
-        "q_relative_risk": q_relative_risk,
-        # --- round-10 additions (gated in their landing round)
-        "q_paragraph_neardup": q_paragraph_neardup,
-        "q_match_length_histogram": q_match_length_histogram,
-        "q_contamination_matrix": q_contamination_matrix,
-    }
-    head = {k: reg[k] for k in _GATE_HEAD}
-    head.update(reg)
-    return head
+    """Every module-level ``q_*`` function keyed by its name:
+    ``_GATE_HEAD`` first, then the rest in definition order."""
+    reg = {n: f for n, f in globals().items() if n.startswith("q_") and callable(f)}
+    return {**{n: reg[n] for n in _GATE_HEAD}, **reg}
 
 
 # ---------------------------------------------------------------- oracles
@@ -10803,15 +10322,6 @@ def _countmin_oracle() -> str:
     from iowa_liquor_sales_spark.operators.sketches import countmin_sql
 
     return countmin_sql("l_suppkey", "lineitem", depth=4, width=256)
-
-
-# Declared queries whose semantics are genuinely non-SQL-expressible:
-# the driver contract allows omitting their oracle_sql() entry and
-# records a weaker rows-only check. EMPTY since round 9: the last
-# member, q_compression_ratio, now gates through a partial oracle
-# (exact doc_id + utf-8 byte length, zlib outputs folded into a
-# verifiable-envelope boolean; exact byte counts stay pytest-pinned).
-NON_SQL_QUERIES = frozenset()
 
 
 def _canonical_dedup_oracle() -> str:

@@ -276,11 +276,16 @@ def q_silver_transform(spark, staged_path: str):
     )
 
 
-def _make_spark(cpus: str):
+def _cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _make_spark(cpus: int):
     spark = get_spark(
         app_name="iowa-engine-bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.ui.enabled": "false",
@@ -352,7 +357,7 @@ def run_cohort(cohort: str) -> None:
     """Child mode: one JVM, one cohort. Prints a single JSON line with
     this cohort's timings + stage splits (parent merges)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     spark = _make_spark(cpus)
     queries = entry_mod.queries()
     timings: dict[str, float] = {}
@@ -363,7 +368,7 @@ def run_cohort(cohort: str) -> None:
     _force(entry_mod.entry(spark))
 
     wh, ingest_sec = _ingest_warehouse(
-        spark, sf_dir, int(cpus), timed=(cohort == "core")
+        spark, sf_dir, cpus, timed=(cohort == "core")
     )
     if cohort == "core":
         timings["q_warehouse_ingest"] = ingest_sec
@@ -455,7 +460,7 @@ def run_cohort(cohort: str) -> None:
 
     if cohort == "baseline":
         staged = tempfile.mkdtemp(prefix="bench_stringly_") + "/lineitem_str"
-        stage_stringly(spark, wh, staged, n_parts=int(cpus))
+        stage_stringly(spark, wh, staged, n_parts=cpus)
         timed("q_silver_transform", lambda: q_silver_transform(spark, staged))
 
         # Reference load-stage analog (BASELINE: 19k rows/s in-memory CSV
@@ -571,7 +576,7 @@ def main() -> None:
         for c, w in cohort_walls.items()
         if quiet_walls.get(c) and w > 1.5 * quiet_walls[c]
     )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     detail = dict(full)
     detail["cpus"] = cpus
     detail["cohorts"] = {k: len(v) for k, v in COHORTS.items()}

@@ -1,27 +1,19 @@
 """Session-wide registry of per-call persisted relations.
 
-Round-10 added ~12 operator-internal ``.persist()`` calls (shared
+Operators call :func:`pin` instead of a bare ``.persist()`` for shared
 subtrees that a self-join or multi-branch consumer would otherwise
-re-evaluate — guide §5).  A ``DataFrame.persist()`` registers the plan
-in the session's CacheManager, which holds a STRONG reference: without
-an explicit ``unpersist()`` the cached relation lives until JVM death.
-In a long-lived session that runs many queries (the external driver,
-the sharded oracle sweep, one bench cohort JVM) those per-call pins
-accumulate as executor-storage pressure — the round-10 verdict names
-this as the likely root cause of the documented intra-JVM bench drift.
+re-evaluate; inside the query the semantics are identical (same storage
+level, same reuse).
 
-The contract here (round-11 verdict item 3):
+A ``DataFrame.persist()`` registers the plan in the session's
+CacheManager, which holds a strong reference. Nothing calls
+:func:`release_pinned` today, so a pinned relation stays cached for the
+life of the session, and in a session that runs many queries the pins
+accumulate as executor-storage pressure.
 
-- operators call :func:`pin` instead of bare ``.persist()``; semantics
-  inside the query are identical (same storage level, same reuse);
-- whoever materializes the query's output calls :func:`release_pinned`
-  afterwards — ``__spark_entry__.queries()`` wraps every query callable
-  to release the PREVIOUS query's pins on entry (by then the caller has
-  materialized that query's result), ``bench.py`` releases after every
-  timed rep, and the oracle harness releases after each comparison.
-
-Releasing is always CORRECT regardless of timing: ``unpersist`` is a
-hint, and a consumer that re-runs after release simply recomputes.
+:func:`release_pinned` unpersists every relation pinned so far. Calling
+it is correct at any time: ``unpersist`` is a hint, and a consumer that
+re-runs after release simply recomputes.
 """
 
 from __future__ import annotations

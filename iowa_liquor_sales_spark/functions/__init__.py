@@ -1,7 +1,8 @@
 """Column-expression layer: pure ``pyspark.sql.functions`` compositions.
 
-No Python UDFs here — every helper returns a Catalyst expression so it stays
-inside whole-stage codegen and is pushdown/pruning friendly.
+No Python UDFs here — every helper returns a Catalyst expression, so it runs
+in the JVM and is pushdown/pruning friendly. The higher-order functions in
+``vectors`` are evaluated interpreted, not inside whole-stage codegen.
 """
 
 from iowa_liquor_sales_spark.functions.cleansing import (

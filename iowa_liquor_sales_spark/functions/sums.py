@@ -66,25 +66,6 @@ def floor_scaled(col: Column, pow10: int, alias: str) -> Column:
     return F.floor(col * F.lit(float(10**pow10))).cast("long").alias(alias)
 
 
-def dsum_sql(expr: str, scale: int = 2) -> str:
-    """DuckDB/ANSI rendering of the same exact-sum convention, used by the
-    oracle layer so both engines compute identical bits."""
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,{scale}))) AS DOUBLE)"
-
-
-def davg_sql(expr: str, scale: int = 2) -> str:
-    return (
-        f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,{scale}))) AS DOUBLE)"
-        f" / COUNT({expr})"
-    )
-
-
-def xsum_sql(expr: str) -> str:
-    """DuckDB twin of :func:`xsum` — SUM(BIGINT) is HUGEINT (int128),
-    exact at any scale."""
-    return f"SUM({expr})"
-
-
 def det_double_sql(name: str) -> str:
     """DuckDB twin of :func:`det_double`.
 

@@ -1,8 +1,8 @@
 """Vector math over ``array<float>`` embedding columns — JVM-side only.
 
 ``F.zip_with``/``F.aggregate`` are Catalyst higher-order functions: the dot
-product runs inside whole-stage codegen with zero Python involvement, which
-is the right hot path for brute-force similarity over billions of vectors.
+product runs in the JVM with zero Python involvement, but Spark evaluates
+higher-order functions interpreted, not inside whole-stage codegen.
 Accumulation is sequential over the array (deterministic), matching a
 single-threaded oracle's evaluation order.
 """

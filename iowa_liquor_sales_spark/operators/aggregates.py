@@ -55,14 +55,6 @@ def count_star(df: DataFrame) -> DataFrame:
     return df.agg(F.count(F.lit(1)).alias("n"))
 
 
-def group_rollup(df: DataFrame, keys: list[str], measure: str, scale: int = 2) -> DataFrame:
-    """Generic keyed rollup with deterministic money sums."""
-    return df.groupBy(*keys).agg(
-        dsum(measure, scale, f"sum_{measure}"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
 def cube_summary(df: DataFrame, keys: list[str], measure: str, scale: int = 2) -> DataFrame:
     """CUBE over the keys with deterministic sums — the multi-grain rollup
     (all subtotal combinations) the star schema's analytics call for.

@@ -27,8 +27,6 @@ the judge can check semantics against a recursive-CTE oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -38,10 +36,8 @@ from iowa_liquor_sales_spark.caching import pin
 # grid_dbscan, which imports it): node-map relations are a handful of
 # ids + one label each (~50 B/row framed), so 2M rows is ~100 MB built —
 # comfortable on any executor profile this engine targets while staying
-# far under Spark's 8 GB / 512M-row broadcast hard cap. Production
-# clusters with smaller executors can lower it via env without touching
-# code; 0 disables the broadcast arm entirely.
-_BCAST_ROW_CAP = int(os.environ.get("IOWA_GRAPH_BROADCAST_ROWS", "2000000"))
+# far under Spark's 8 GB / 512M-row broadcast hard cap.
+_BCAST_ROW_CAP = 2_000_000
 
 
 def connected_components(

@@ -547,18 +547,6 @@ def label_centroids_e6(
     )
 
 
-def _sq8_code(x, mn: float, mx: float):
-    # floor((x - mn) * 255 / (mx - mn) + 0.5): identical literal expression
-    # tree in Spark, DuckDB, and Python (see ann_sq8_topk) — IEEE double
-    # ops are deterministic, so the three agree bit-for-bit.
-    if mx <= mn:
-        return F.lit(0).cast("long")
-    return F.floor(
-        (x.cast("double") - F.lit(mn)) * F.lit(255.0) / F.lit(mx - mn)
-        + F.lit(0.5)
-    ).cast("long")
-
-
 def ann_sq8_topk(
     embeddings: DataFrame,
     query_id: int,

@@ -420,19 +420,6 @@ def grid_quantiles_sql(
         GROUP BY q ORDER BY q"""
 
 
-def kmv_sql(expr: str, table: str, k: int) -> str:
-    """DuckDB rendering of the full estimate (exact sort — the oracle does
-    not need the bounded-state plan, only identical bits)."""
-    return f"""
-        WITH mins AS (
-          SELECT DISTINCT CAST(('0x' || substr(md5(CAST(({expr}) AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-          FROM {table} ORDER BY h LIMIT {k})
-        SELECT CASE WHEN COUNT(*) < {k} THEN CAST(COUNT(*) AS DOUBLE)
-                    ELSE CAST({k - 1} AS DOUBLE) * pow(2, 60) / CAST(MAX(h) AS DOUBLE)
-               END AS est_distinct
-        FROM mins"""
-
-
 def _alpha_eff(p: int) -> float:
     """The full HLL constant alpha_m * m^2 * 2^maxrho folded to ONE double
     in Python and injected into BOTH engines as the same literal — an
@@ -891,45 +878,6 @@ def ams_f2(
             "(4 * f2_exact) AS BIGINT)"
         ).alias("err_ppm"),
     )
-
-
-def ams_f2_sql(
-    expr: str, table: str, groups: int = 3, per_group: int = 4
-) -> str:
-    """DuckDB rendering of :func:`ams_f2` (bit-identical replay: the
-    per-row sign sum is re-associated as Σ_key count·sign — exact
-    integer arithmetic, so the regrouping is lossless)."""
-    d = groups * per_group
-    sign = (
-        "((CAST(('0x' || substr(md5('ams{i}:' || CAST(({e}) AS VARCHAR)), "
-        "1, 15)) AS BIGINT) % 2) * 2 - 1)"
-    )
-    zs = ", ".join(
-        f"SUM(cnt * {sign.format(i=i, e='k')}) AS z{i}" for i in range(d)
-    )
-    gsums = ", ".join(
-        "CAST(("
-        + " + ".join(
-            f"z{g * per_group + j} * z{g * per_group + j}"
-            for j in range(per_group)
-        )
-        + ") AS HUGEINT) AS gs" + str(g)
-        for g in range(groups)
-    )
-    arr = ", ".join(f"gs{g}" for g in range(groups))
-    return f"""
-        WITH kc AS (SELECT CAST(({expr}) AS VARCHAR) AS k,
-                           COUNT(*) AS cnt
-                    FROM {table} GROUP BY 1),
-        z AS (SELECT {zs} FROM kc),
-        gs AS (SELECT {gsums} FROM z),
-        med AS (SELECT list_sort([{arr}])[{groups // 2 + 1}]
-                    AS ams_med_sum FROM gs),
-        ex AS (SELECT SUM(CAST(cnt AS HUGEINT) * cnt) AS f2_exact FROM kc)
-        SELECT f2_exact, ams_med_sum,
-               CAST((abs(ams_med_sum - 4 * f2_exact) * 1000000)
-                    // (4 * f2_exact) AS BIGINT) AS err_ppm
-        FROM ex CROSS JOIN med"""
 
 
 def ams_f2(

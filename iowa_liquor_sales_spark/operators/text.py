@@ -1219,18 +1219,6 @@ def ngram_novelty(
     )
 
 
-
-def _gram_at(ws, n: int):
-    """Unary shingle lambda for F.transform — a closure factory keeps the
-    lambda single-argument (a 2-param lambda would be read by PySpark as
-    the (element, index) binary form)."""
-    def fn(i):
-        return F.concat_ws(
-            " ", *[F.element_at(ws, i + j) for j in range(n)]
-        )
-    return fn
-
-
 def dup_rate_curve(
     df: DataFrame,
     text_col: str = "text",

@@ -205,9 +205,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return raw.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}

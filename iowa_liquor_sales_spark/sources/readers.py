@@ -13,12 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan (reference S5, src/transform.py:32) — vectorized reader,
-    row-group min/max skipping, automatic column pruning."""
-    return spark.read.parquet(path)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -36,20 +30,3 @@ def read_csv(
     if timestamp_format is not None:
         reader = reader.option("timestampFormat", timestamp_format)
     return reader.csv(path)
-
-
-def read_socrata_staged(
-    spark: SparkSession, staging_dir: str, schema: T.StructType
-) -> DataFrame:
-    """Scan CSV pages staged from a Socrata-style paged HTTP API
-    (reference S1, src/extract.py:18-31).
-
-    The reference's live HTTP pull is network-bound (~5,450 rows/s,
-    BASELINE.md); engine-side the right design is stage-then-scan: any
-    fetcher lands pages as files, Spark scans the directory in parallel. A
-    faithful *live* source would be a custom Python DataSource
-    (``spark.dataSource.register``) emitting one partition per page range —
-    deliberately not implemented here because the container has no network
-    and the scan, not the fetch, is the engine's concern.
-    """
-    return read_csv(spark, staging_dir, schema)

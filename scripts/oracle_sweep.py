@@ -47,17 +47,8 @@ def run_shard(sf_dir: str, shard: int, n_shards: int) -> int:
     con = duckdb_con(sf_dir)
     queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     names = sorted(queries)[shard::n_shards]
-    fails, notes = [], []
+    fails = []
     for name in names:
-        if name in getattr(entry_mod, "NON_SQL_QUERIES", ()):
-            n = queries[name](spark, sf_dir).count()
-            if n <= 0:
-                fails.append(name)
-                print(f"FAIL {name}: rows-only check returned {n} rows")
-            else:
-                notes.append(name)
-                print(f"NOTE {name}: no SQL oracle (rows-only), rows={n}")
-            continue
         ok, msg = compare(queries[name](spark, sf_dir), con, oracles[name])
         if not ok:
             fails.append(name)
@@ -71,7 +62,6 @@ def run_shard(sf_dir: str, shard: int, n_shards: int) -> int:
                 "n_shards": n_shards,
                 "checked": names,
                 "fails": fails,
-                "notes": notes,
                 "entry_rows": entry_rows,
             }
         ),
@@ -124,7 +114,7 @@ def main() -> int:
         for line in out.splitlines():
             if line.startswith("SHARD_RESULT "):
                 payload = json.loads(line[len("SHARD_RESULT "):])
-            elif line.startswith(("FAIL ", "NOTE ")):
+            elif line.startswith("FAIL "):
                 print(line)
         if payload is None:
             print(f"FAIL <shard rc={p.returncode}>: no SHARD_RESULT in output")

@@ -1516,681 +1516,3 @@ def main() -> None:
 
 if __name__ == "__main__":
     main()
-
-
-def bench_round8d(spark) -> dict:
-    """Growth shapes for the round-8 statistics/encoding wave: data
-    grows 4x per step while the contracts' bounded relations (cells,
-    support, levels, folds, replicate count) stay FIXED — the claim
-    under test is that every op reduces to one combinable scan plus
-    work on an O(bounded) relation, so walls should track the scan.
-    hurst_rs replicates x|window_sizes| and pays per-chunk windows, so
-    slightly superlinear constants are expected but not blowups."""
-    from iowa_liquor_sales_spark.operators.aggregates import (
-        kendall_tau_b,
-        quadratic_fit,
-    )
-    from iowa_liquor_sales_spark.operators.curation import target_encode_oof
-    from iowa_liquor_sales_spark.operators.quality import (
-        effect_sizes,
-        isotonic_calibration,
-        randomization_test,
-        wasserstein_1d,
-    )
-    from iowa_liquor_sales_spark.operators.temporal import hurst_rs
-
-    timings: dict[str, dict] = {}
-
-    def t(label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
-
-    for factor in (1, 4, 16):
-        n = 200_000 * factor
-        d = spark.range(n).select(
-            F.col("id"),
-            (F.col("id") % 50).alias("x"),
-            ((F.col("id") * 7919) % 7).alias("y7"),
-            ((F.col("id") * 104729) % 1000).alias("v"),
-            F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
-            (F.col("id") % 8).alias("k"),
-        )
-        t(
-            "kendall_tau_350cells",
-            factor,
-            lambda dd=d: kendall_tau_b(dd, "x", "y7"),
-        )
-        t(
-            "wasserstein_1k_support",
-            factor,
-            lambda dd=d: wasserstein_1d(dd, "v", "g", "a", "b"),
-        )
-        t(
-            "effect_sizes",
-            factor,
-            lambda dd=d: effect_sizes(dd, "v", "g", "a", "b"),
-        )
-        t(
-            "randomization_50reps",
-            factor,
-            lambda dd=d: randomization_test(
-                dd, "v", "g", "a", "b", id_col="id", n_reps=50
-            ),
-        )
-        t(
-            "isotonic_100lvl",
-            factor,
-            lambda dd=d: isotonic_calibration(
-                dd.select(
-                    F.expr("v div 10").alias("s"),
-                    (F.col("id") % 3 == 0).alias("y"),
-                ),
-                "s",
-                "y",
-            ),
-        )
-        t(
-            "target_encode_50cat",
-            factor,
-            lambda dd=d: target_encode_oof(
-                dd.select("id", "x", F.col("v").cast("double").alias("t")),
-                "x",
-                "t",
-                "id",
-                n_folds=5,
-            ),
-        )
-        t(
-            "hurst_8series",
-            factor,
-            lambda dd=d: hurst_rs(dd, "k", "id", "v"),
-        )
-        t(
-            "quadratic_fit",
-            factor,
-            lambda dd=d: quadratic_fit(dd, "x", "v"),
-        )
-    return timings
-
-
-def render_round8d(timings: dict) -> list[str]:
-    lines = [
-        "",
-        "## Round-8 statistics/encoding probe (data grows, bounded relations fixed)",
-        "",
-        "Synthesized 200k/800k/3.2M-row relations; the contingency cells",
-        "(50x7), value support (1k), score levels (100), categories (50),",
-        "folds (5) and replicate count (50) stay fixed while rows grow 4x",
-        "per step. Every op claims one combinable scan + O(bounded)",
-        "post-work; linear-ish walls confirm it. hurst_8series pays the",
-        "x4 window-size replication and per-chunk windows (still",
-        "partition-parallel).",
-        "",
-        "| op | wall by growth factor |",
-        "|---|---|",
-    ]
-    for label, per in timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
-    return lines
-
-
-def bench_round8e(spark) -> dict:
-    """Growth shapes for the round-8 graph wave: k-truss peeling and
-    sampled betweenness on hash-scatter graphs with average degree
-    fixed (~12) while V and E grow 4x per step. k-truss is
-    O(Σ deg²)-wedge work per round; betweenness is O(E) per BFS level
-    per source batch — both should grow near-linearly in E when degree
-    is held constant."""
-    from iowa_liquor_sales_spark.operators.graph import (
-        betweenness_sample,
-        ktruss_converged,
-    )
-
-    timings: dict[str, dict] = {}
-
-    def t(label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
-
-    for factor in (1, 4, 16):
-        E = 50_000 * factor
-        V = E // 12
-        edges = spark.range(E).select(
-            ((F.col("id") * 7919) % V).alias("src"),
-            ((F.col("id") * 104729 + 13) % V).alias("dst"),
-        )
-        t(
-            "ktruss_k4",
-            factor,
-            lambda e=edges: ktruss_converged(e, k=4),
-        )
-        t(
-            "betweenness_4src_d4",
-            factor,
-            lambda e=edges: betweenness_sample(
-                e, sources=[0, 1, 2, 3], max_depth=4
-            ),
-        )
-    return timings
-
-
-def render_round8e(timings: dict) -> list[str]:
-    lines = [
-        "",
-        "## Round-8 graph-wave probe (k-truss + sampled betweenness)",
-        "",
-        "Hash-scatter graphs, average degree ~12 fixed while V and E",
-        "grow 4x per step. k-truss pays O(sum deg^2) wedge work per",
-        "peel round; betweenness pays O(E) per BFS level per source",
-        "batch — near-linear walls in E confirm no hidden all-pairs.",
-        "",
-        "| op | wall by growth factor |",
-        "|---|---|",
-    ]
-    for label, per in timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
-    return lines
-
-
-def bench_round9(spark) -> tuple[dict, dict, dict]:
-    """Round-9 probes (round-8 verdict items 5, 7, 9):
-
-    (a) tail attribution — randomization_test and hurst_rs walls grew
-        ~3x per 4x step at x16 where siblings stayed flat. The claim to
-        test: both do O(n x reps|windows) work BY CONTRACT (every row
-        contributes to every replicate / window level), so the walls are
-        LINEAR in true work and only look superlinear while fixed
-        overhead dominates the small sizes. Extending to x64 should show
-        the step ratio converging to ~4x (linear), and per-unit cost
-        flat-to-falling. hurst additionally carries a parallelism cap —
-        the per-series row_number runs one task per series — so the
-        8-series arm is compared against a 1024-series arm (same rows,
-        partition-parallel) and against the new distributed_index arm
-        (range-partitioned global_row_number, few-long-series remedy).
-
-    (b) ANN index lifecycle at base growth — build once, query many:
-        the base grows 1x/8x/64x with n_cells scaled proportionally
-        (constant ~125-vector cells, the FAISS sizing rule), probe set
-        fixed (nprobe=2). The persisted index's query wall must stay
-        ~flat (partition-pruned probe cells of constant size) while the
-        one-off build wall grows with the base.
-
-    (c) grid_dbscan self-diagnosis — the growing-density arm (centers
-        fixed at 50 while n grows) must FIRE grid_too_coarse with the
-        per-cell occupancy numbers; the fixed-density arm at the same n
-        must stay quiet.
-    """
-    from iowa_liquor_sales_spark.operators.clustering import grid_dbscan
-    from iowa_liquor_sales_spark.operators.quality import randomization_test
-    from iowa_liquor_sales_spark.operators.similarity import (
-        build_ann_index,
-        ivf_topk,
-        load_ann_index,
-    )
-    from iowa_liquor_sales_spark.operators.temporal import hurst_rs
-
-    tails: dict[str, dict] = {}
-
-    def t(store, label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        store.setdefault(label, {})[factor] = round(best, 2)
-
-    # Warm the JVM on tiny inputs first: the first timed op of a fresh
-    # session otherwise pays all of codegen/JIT (the first probe run put
-    # 107 s on an x1 arm whose x4 size measured 2.9 s).
-    warm = spark.range(20_000).select(
-        F.col("id"),
-        ((F.col("id") * 104729) % 1000).alias("v"),
-        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
-        (F.col("id") % 8).alias("k"),
-    )
-    for mk in (
-        lambda: randomization_test(warm, "v", "g", "a", "b", id_col="id", n_reps=5),
-        lambda: hurst_rs(warm, "k", "id", "v"),
-        lambda: hurst_rs(warm, "k", "id", "v", distributed_index=True),
-    ):
-        mk().write.format("noop").mode("overwrite").save()
-
-    for factor in (1, 4, 16, 64):
-        n = 200_000 * factor
-        d = spark.range(n).select(
-            F.col("id"),
-            ((F.col("id") * 104729) % 1000).alias("v"),
-            F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
-            (F.col("id") % 8).alias("k"),
-            (F.col("id") % 1024).alias("k_many"),
-        )
-        t(
-            tails,
-            "randomization_50reps",
-            factor,
-            lambda dd=d: randomization_test(
-                dd, "v", "g", "a", "b", id_col="id", n_reps=50
-            ),
-        )
-        t(
-            tails,
-            "hurst_8series",
-            factor,
-            lambda dd=d: hurst_rs(dd, "k", "id", "v"),
-        )
-        t(
-            tails,
-            "hurst_8series_distidx",
-            factor,
-            lambda dd=d: hurst_rs(dd, "k", "id", "v", distributed_index=True),
-        )
-        t(
-            tails,
-            "hurst_1024series",
-            factor,
-            lambda dd=d: hurst_rs(dd, "k_many", "id", "v"),
-        )
-
-    ann: dict[str, dict] = {}
-    emb_base = spark.read.parquet(f"{BASE}/embeddings.parquet")
-    mx = emb_base.agg(F.max("vec_id")).head()[0] + 1
-    for factor in (1, 8, 64):
-        if factor == 1:
-            emb_path = f"{BASE}/embeddings.parquet"
-        else:
-            emb_path = f"{WORK}/emb_x{factor}"
-            reps = F.explode(
-                F.sequence(F.lit(0), F.lit(factor - 1))
-            ).alias("rep")
-            (
-                emb_base.select("*", reps)
-                .withColumn(
-                    "vec_id", F.col("vec_id") + F.col("rep") * F.lit(mx)
-                )
-                .drop("rep")
-                .repartition(32)
-                .write.mode("overwrite")
-                .parquet(emb_path)
-            )
-        emb = spark.read.parquet(emb_path)
-        idx_path = f"{WORK}/annidx_x{factor}"
-        n_cells = 16 * factor
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            build_ann_index(emb, idx_path, n_cells=n_cells)
-            best = min(best, time.perf_counter() - t0)
-        ann.setdefault("index_build", {})[factor] = round(best, 2)
-        idx = load_ann_index(spark, idx_path)
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            ivf_topk(
-                emb, query_id=7, k=10, nprobe=2, index=idx
-            ).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        ann.setdefault("prebuilt_query", {})[factor] = round(best, 2)
-
-    def pts(n, centers):
-        return spark.range(n).select(
-            F.col("id"),
-            ((F.col("id") % centers) * 50 + (F.col("id") * 7) % 8)
-            .cast("long")
-            .alias("x"),
-            (((F.col("id") * 13) % centers) * 50 + (F.col("id") * 11) % 8)
-            .cast("long")
-            .alias("y"),
-        )
-
-    diag: dict[str, dict] = {}
-    n = 160_000  # the x16 size whose growing-density wall bent in r8
-    obs_grow: dict = {}
-    grid_dbscan(pts(n, 50), eps=10, min_pts=4, observations=obs_grow)
-    diag["growing_density_x16"] = obs_grow["cell_density"]
-    obs_fix: dict = {}
-    grid_dbscan(
-        pts(n, int((n / 4) ** 0.5)), eps=10, min_pts=4, observations=obs_fix
-    )
-    diag["fixed_density_x16"] = obs_fix["cell_density"]
-    return tails, ann, diag
-
-
-def render_round9(tails: dict, ann: dict, diag: dict) -> list[str]:
-    lines = [
-        "",
-        "## Round-9 probe: tail attribution, ANN lifecycle growth, DBSCAN self-diagnosis",
-        "",
-        "**(a) randomization/hurst tails** (round-8 verdict item 7).",
-        "Same synthesized relation as the round-8 statistics probe,",
-        "extended to x64 (12.8M rows). Both ops do O(n x reps|windows)",
-        "work BY CONTRACT — every row contributes to every replicate /",
-        "window level — so the wall must be linear in that work; the",
-        "round-8 'bend' is linear work emerging from under fixed",
-        "overhead at the small sizes, not a candidate explosion.",
-        "hurst_8series additionally serializes its per-series index",
-        "into 8 tasks; the 1024-series arm (same rows) and the new",
-        "distributed_index arm (range-partitioned global_row_number)",
-        "bound that cap from both sides.",
-        "",
-        "| op | wall by growth factor |",
-        "|---|---|",
-    ]
-    for label, per in tails.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
-    r = tails.get("randomization_50reps", {})
-    if 16 in r and 64 in r and 4 in r:
-        lines += [
-            "",
-            f"Step ratios (x4->x16->x64): randomization "
-            f"{r[16] / max(r[4], 1e-9):.2f}x then {r[64] / max(r[16], 1e-9):.2f}x; "
-            "linear-in-work predicts 4.0x per step. Per-M-row-reps cost: "
-            + ", ".join(
-                f"x{f}: {tails['randomization_50reps'][f] / (0.2 * f * 50):.3f}s"
-                for f in sorted(r)
-            )
-            + " — flat-to-falling unit cost = no superlinear term.",
-            "",
-            "Reading: documented ACCEPT for randomization (the wall is",
-            "the O(n x reps) map volume the statistic requires; the",
-            "map-side combine already bounds the shuffle at O(reps) rows",
-            "per task — the plan gate",
-            "test_randomization_test_combines_replicates_map_side pins",
-            "it). hurst's extra factor is the 8-task per-series index",
-            "sort: the 1024-series arm (same rows, core-parallel) runs",
-            "the x64 size several times faster, and the new",
-            "distributed_index arm beats the default at x64 in the",
-            "8-series regime while losing at small sizes to its",
-            "range-shuffle + offset constant — default stays per-key,",
-            "distributed_index is the documented few-long-series remedy.",
-        ]
-    lines += [
-        "",
-        "**(b) ANN index lifecycle at base growth** (round-8 verdict",
-        "item 9). Base 2k -> 16k -> 128k vectors (x1/x8/x64), n_cells",
-        "scaled with the base (16/128/1024 — constant ~125-vector",
-        "cells, the cleanest isolation of the query-side claim),",
-        "nprobe=2 fixed. Build is the",
-        "one-off; the query must stay ~flat because the broadcast",
-        "probe join prunes the partitioned assignment scan to two",
-        "constant-size cells regardless of base size.",
-        "",
-        "| stage | wall by base growth |",
-        "|---|---|",
-    ]
-    for label, per in ann.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
-    lines += [
-        "",
-        "The first run of this probe CAUGHT a real layout bug: the",
-        "build wrote partitionBy(cell) straight from the assignment",
-        "shuffle — tasks x cells output files (30,907 at x64) — and",
-        "every query paid a 17 s listing/scheduling tax. Fixed in",
-        "round 9 by clustering on cell before the write (one file per",
-        "cell; row-group splits keep big cells scan-parallel). The",
-        "table above is the fixed layout. Build is O(n x n_cells)",
-        "assignment distances — quadratic when cells scale WITH the",
-        "base; production sizes n_cells ~ sqrt(N) (the usual IVF",
-        "rule) for an O(n^1.5) build.",
-    ]
-    g, fx = diag["growing_density_x16"], diag["fixed_density_x16"]
-    lines += [
-        "",
-        "**(c) grid_dbscan self-diagnosis fires at the contract edge**",
-        "(round-8 verdict item 5). At the x16 size whose growing-density",
-        "wall bent in round 8 (160k points, 50x50 centers):",
-        f"growing-density arm -> p99 cell = {g['p99_cell']}, max = "
-        f"{g['max_cell']}, same-cell candidates = "
-        f"{g['same_cell_candidates']}, grid_too_coarse = "
-        f"**{g['grid_too_coarse']}** (remedy emitted); fixed-density arm "
-        f"at the same n -> p99 cell = {fx['p99_cell']}, grid_too_coarse "
-        f"= {fx['grid_too_coarse']}. The 100 TB caller sees the",
-        "O(n x occupancy) bend BEFORE paying for it.",
-    ]
-    return lines
-
-
-def bench_round10(spark) -> dict:
-    """Round-10 probe: ANN build under the new sqrt(N) DEFAULT cell
-    sizing (round-9 verdict item 3). Same replicated corpora as the
-    round-9 lifecycle probe; n_cells=None so build_ann_index self-sizes
-    to max(16, int(sqrt(N))) — build should now grow ~O(n^1.5) instead
-    of the quadratic linear-cell arm (161 s at x64 in round 9), and the
-    prebuilt query wall should stay flat."""
-    import time
-
-    from iowa_liquor_sales_spark.operators.similarity import (
-        build_ann_index,
-        ivf_topk,
-        load_ann_index,
-    )
-
-    emb_base = spark.read.parquet(f"{BASE}/embeddings.parquet")
-    mx = emb_base.agg(F.max("vec_id")).head()[0] + 1
-    out: dict[str, dict] = {}
-    for factor in (1, 8, 64):
-        if factor == 1:
-            emb_path = f"{BASE}/embeddings.parquet"
-        else:
-            emb_path = f"{WORK}/emb_x{factor}"
-            reps = F.explode(
-                F.sequence(F.lit(0), F.lit(factor - 1))
-            ).alias("rep")
-            (
-                emb_base.select("*", reps)
-                .withColumn(
-                    "vec_id", F.col("vec_id") + F.col("rep") * F.lit(mx)
-                )
-                .drop("rep")
-                .repartition(32)
-                .write.mode("overwrite")
-                .parquet(emb_path)
-            )
-        emb = spark.read.parquet(emb_path)
-        n = emb.count()
-        cells = max(16, int(n**0.5))
-        idx_path = f"{WORK}/annidx_sqrt_x{factor}"
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            build_ann_index(emb, idx_path)  # n_cells=None -> sqrt rule
-            best = min(best, time.perf_counter() - t0)
-        row: dict = {"n_vectors": n, "n_cells": cells, "build_s": round(best, 2)}
-        idx = load_ann_index(spark, idx_path)
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            ivf_topk(
-                emb, query_id=7, k=10, nprobe=2, index=idx
-            ).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        row["prebuilt_query_s"] = round(best, 2)
-        out[factor] = row
-    return out
-
-
-def render_round10(sized: dict) -> list[str]:
-    lines = [
-        "",
-        "## Round-10 probe: ANN build under the sqrt(N) default cell sizing",
-        "",
-        "build_ann_index(n_cells=None) now self-sizes to",
-        "max(16, int(sqrt(N))) (round-9 verdict item 3). Round 9's",
-        "linear-cell arm (n_cells = 16 x factor) hit a 161 s build wall",
-        "at x64 because assignment work is O(n x n_cells) = O(n^2)",
-        "under linear scaling; the sqrt default makes the same probe",
-        "O(n^1.5) with NO caller knowledge. Same replicated sf0.1",
-        "corpora as the round-9 probe; best of 2 runs:",
-        "",
-        "| growth | vectors | cells (sqrt rule) | build wall | prebuilt query wall |",
-        "|---|---|---|---|---|",
-    ]
-    for factor, row in sized.items():
-        lines.append(
-            f"| x{factor} | {row['n_vectors']:,} | {row['n_cells']} |"
-            f" {row['build_s']} s | {row['prebuilt_query_s']} s |"
-        )
-    lines += [
-        "",
-        "Build growth now tracks ~n^1.5 (each x8 in corpus is ~x22.6",
-        "in n x sqrt(n) work), the query wall stays flat, and per-cell",
-        "occupancy stays ~sqrt(N) so probe scans keep balance without",
-        "the caller ever choosing a cell count. Explicit n_cells",
-        "remains for the cases the rule can't see (target recall /",
-        "nprobe budgets tuned offline).",
-        "",
-        "Bench load-awareness (round-9 verdict item 2): bench.py now",
-        "stamps per-cohort 1-min loadavg into BENCH_DETAIL.json and",
-        "the compact trailer, and flags `suspect_load_cohorts` when a",
-        "cohort wall exceeds the COMMITTED quiet-box wall by >1.5x —",
-        "1.5x sits above the measured quiet-box run-to-run jitter",
-        "(~4% on the 158-entry median, ~20% worst single cohort) and",
-        "below the 1.9x the loaded-box round-9 stats2 cohort actually",
-        "read, so real regressions in between still surface as",
-        "un-flagged slow walls worth investigating.",
-    ]
-    return lines
-
-
-def bench_round10b(spark, docs_paths: dict) -> dict:
-    """Round-10 second probe: growth shapes for the three operators
-    added THIS round, over the word-salted replicated corpus (salting
-    keeps replicas from being near-dups, so candidate/cross-doc-gram
-    counts grow linearly with the corpus — the probe measures the
-    operator, not an artifact of copying).
-
-    - paragraph_neardup: the unit count grows ~14x per replication
-      step's doc growth (25-word chunks), but per-unit shingle sets
-      are small and candidates stay bucket-local — wall must track the
-      corpus linearly.
-    - match_length_histogram: positioned 5-grams grow linearly;
-      cross-doc grams only exist WITHIN a replica slice, so the
-      island fold stays per-doc and the histogram O(distinct lengths).
-    - contamination_matrix: sources are FIXED (the matrix stays
-      O(sources^2)) while the distinct-gram relations grow linearly —
-      the one shingle join is the whole cost.
-    """
-    from iowa_liquor_sales_spark.operators.dedup import (
-        dup_span_length_histogram,
-        paragraph_neardup_pairs,
-    )
-    from iowa_liquor_sales_spark.operators.text import contamination_matrix
-
-    timings: dict[str, dict] = {}
-    warmed: set = set()
-
-    def t(label, factor, mk):
-        if label not in warmed:
-            # untimed warm-up: the x1 cell runs first in a cold JVM and
-            # would otherwise record codegen/JIT compile, not the
-            # operator (first measured table read x1 SLOWER than x4)
-            spark.catalog.clearCache()
-            mk().write.format("noop").mode("overwrite").save()
-            warmed.add(label)
-        # best-of-4: the round-10 measurement box oscillates (see the
-        # bench re-base adjudication in SCALE.md) and contention only
-        # ever INFLATES a wall, so the minimum is the estimator
-        best = float("inf")
-        for _ in range(4):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
-
-    for factor, path in docs_paths.items():
-        docs = spark.read.parquet(path)
-        t(
-            "paragraph_neardup",
-            factor,
-            lambda d=docs: paragraph_neardup_pairs(
-                d,
-                "text",
-                "doc_id",
-                sep=None,
-                words_per_chunk=25,
-                min_jaccard=0.5,
-                min_words=3,
-                id_stride=1000,
-            ),
-        )
-        t(
-            "match_length_histogram",
-            factor,
-            lambda d=docs: dup_span_length_histogram(
-                d, "text", "doc_id", k=5
-            ),
-        )
-        t(
-            "contamination_matrix",
-            factor,
-            lambda d=docs: contamination_matrix(
-                d.filter(~F.col("source").isin(["src0", "src1"])),
-                d.filter(F.col("source").isin(["src0", "src1"])),
-                n=3,
-            ),
-        )
-    return timings
-
-
-def render_round10b(timings: dict) -> list[str]:
-    lines = [
-        "",
-        "## Round-10b probe: the round-10 operators under corpus growth",
-        "",
-        "Word-salted replicated sf0.1 documents (replicas are NOT",
-        "near-dups — candidates and cross-doc grams grow linearly, not",
-        "quadratically with copying), x1/x4/x16, best of 2:",
-        "",
-        "| op | " + " | ".join(f"x{f}" for f in (1, 4, 16)) + " |",
-        "|---|---|---|---|",
-    ]
-    for label, per in timings.items():
-        lines.append(
-            f"| {label} | "
-            + " | ".join(f"{per[f]:.2f} s" for f in sorted(per))
-            + " |"
-        )
-    lines += [
-        "",
-        "paragraph_neardup inherits minhash_lsh_pairs' posture at ~14x",
-        "the unit count (25-word chunks) with far smaller per-unit",
-        "shingle sets; match_length_histogram is the duplicated_spans",
-        "dataflow ending in an O(distinct lengths) aggregate;",
-        "contamination_matrix's output stays O(sources^2) while its one",
-        "shingle join grows with the corpus. Linear-ish walls across",
-        "x16 are the 100 TB property; any bend would implicate the",
-        "shingle join's shuffle, not a pair explosion (salting rules",
-        "that out by construction).",
-    ]
-    return lines
