@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from iowa_liquor_sales_spark.operators.joins import fk_violations, pk_duplicates
 from iowa_liquor_sales_spark.plans.iowa import (
     build_gold,
     fact_sales,
@@ -116,6 +117,79 @@ def test_gold_validations_pass(bronze):
     gold = build_gold(silver(bronze))
     results = validate_gold(gold)
     assert all(v == 0 for v in results.values()), results
+
+
+PK_KEYS = {
+    "pk_fact": ("fact_sales", "invoice_line_no"),
+    "pk_dim_store": ("dim_store", "store"),
+    "pk_dim_item": ("dim_item", "itemno"),
+    "pk_dim_vendor": ("dim_vendor", "vendor_no"),
+    "pk_dim_category": ("dim_category", "category"),
+    "pk_dim_date": ("dim_date", "date"),
+}
+FK_KEYS = {
+    "store": ("dim_store", "store"),
+    "itemno": ("dim_item", "itemno"),
+    "vendor_no": ("dim_vendor", "vendor_no"),
+    "category": ("dim_category", "category"),
+    "date": ("dim_date", "date"),
+}
+
+
+def _per_check_reference(gold) -> dict[str, int]:
+    """One action per constraint, through the registry's own operators."""
+    out = {
+        check: pk_duplicates(gold[table], [key]).count()
+        for check, (table, key) in PK_KEYS.items()
+    }
+    fact = gold["fact_sales"]
+    for fk, (dim, key) in FK_KEYS.items():
+        live = fact.filter(F.col(fk).isNotNull())
+        out[f"fk_{fk}"] = fk_violations(live, gold[dim], fk, key).count()
+    return out
+
+
+@pytest.fixture(scope="module")
+def broken_gold(bronze):
+    """Gold with one violation of each kind injected: a duplicated fact PK,
+    a duplicated dim_store key, an orphan store FK, an orphan date FK on a
+    row whose store is the duplicated dim key (so a fan-out of fact rows
+    would double-count it), and a NULL store FK (not a violation)."""
+    gold = build_gold(silver(bronze))
+    fact, stores = gold["fact_sales"], gold["dim_store"]
+    row = fact.filter(F.col("invoice_line_no") == "INV-00001")
+    assert row.select("store").first()["store"] == "S1"
+    gold["fact_sales"] = fact.unionByName(row).unionByName(
+        row.withColumn("invoice_line_no", F.lit("INJ-store"))
+        .withColumn("store", F.lit("S-orphan"))
+    ).unionByName(
+        row.withColumn("invoice_line_no", F.lit("INJ-date"))
+        .withColumn("date", F.lit("1999-12-31").cast("date"))
+    ).unionByName(
+        row.withColumn("invoice_line_no", F.lit("INJ-null"))
+        .withColumn("store", F.lit(None).cast("string"))
+    )
+    gold["dim_store"] = stores.unionByName(
+        stores.filter(F.col("store") == "S1").withColumn("name", F.lit("Store 1 dup"))
+    )
+    return gold
+
+
+def test_validate_gold_matches_per_check_reference(bronze, broken_gold):
+    clean = build_gold(silver(bronze))
+    want_clean = _per_check_reference(clean)
+    assert validate_gold(clean) == want_clean
+    assert set(want_clean.values()) == {0}
+
+    want = _per_check_reference(broken_gold)
+    assert want == {
+        **{k: 0 for k in want_clean},
+        "pk_fact": 1,
+        "pk_dim_store": 1,
+        "fk_store": 1,
+        "fk_date": 1,
+    }
+    assert validate_gold(broken_gold) == want
 
 
 def test_dim_date_pg_dow_convention(spark):
