@@ -8,6 +8,9 @@ script deriving the star schema. Here:
     staged CSV pages --bronze--> typed rows --silver--> cleansed rows
         --gold--> 5 dims + fact (validated) --> analytics query
 
+Everything up to the validated gold tables is ``run_pipeline``, the code
+the command line (``python -m iowa_liquor_sales_spark pipeline``) runs.
+
 Usage:  python examples/run_iowa_pipeline.py [workdir]
 (writes bronze/silver/gold parquet dirs under workdir, default a tmp dir)
 """
@@ -23,11 +26,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from iowa_liquor_sales_spark import get_spark  # noqa: E402
+from iowa_liquor_sales_spark.__main__ import run_pipeline  # noqa: E402
 from iowa_liquor_sales_spark.functions.sums import dsum  # noqa: E402
-from iowa_liquor_sales_spark.plans.iowa import build_gold, silver, validate_gold  # noqa: E402
-from iowa_liquor_sales_spark.schemas import IOWA_RAW_SCHEMA  # noqa: E402
-from iowa_liquor_sales_spark.sources.readers import read_csv  # noqa: E402
-from iowa_liquor_sales_spark.sources.writers import write_csv, write_parquet  # noqa: E402
+from iowa_liquor_sales_spark.sources.writers import write_csv  # noqa: E402
 
 
 def stage_sample_pages(spark, pages_dir: str, n_rows: int = 5000) -> None:
@@ -74,27 +75,13 @@ def main(workdir: str | None = None) -> dict[str, int]:
         app_name="iowa-pipeline-demo",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     pages = f"{work}/pages"
     stage_sample_pages(spark, pages)
 
-    # bronze: typed CSV scan, no inference (S1/S2)
-    bronze = read_csv(spark, pages, IOWA_RAW_SCHEMA, header=True, null_value="\\N")
-    write_parquet(bronze, f"{work}/bronze")
-
-    # silver: C1-C3 coercions, one narrow stage (reference transform task)
-    silver_df = silver(spark.read.parquet(f"{work}/bronze"))
-    write_parquet(silver_df, f"{work}/silver")
-
-    # gold: star schema + validations (reference session.sql)
-    gold = build_gold(spark.read.parquet(f"{work}/silver"))
-    for name, df in gold.items():
-        write_parquet(
-            df, f"{work}/gold/{name}", partition_by=None if name != "fact_sales" else None
-        )
-    violations = validate_gold(gold)
-    assert all(v == 0 for v in violations.values()), violations
+    # bronze -> silver -> gold + PK/FK validation, as the CLI runs it
+    out = run_pipeline(pages, work)
+    assert out["ok"], out["violations"]
 
     # the analytics the star schema serves: sales by category x year
     fact = spark.read.parquet(f"{work}/gold/fact_sales")
@@ -104,16 +91,8 @@ def main(workdir: str | None = None) -> dict[str, int]:
         .groupBy("category_name", F.year("date").alias("year"))
         .agg(dsum("sale_dollars", 2, "total_sales"), F.count(F.lit(1)).alias("n"))
     )
-    counts = {
-        "bronze_rows": bronze.count(),
-        "silver_rows": silver_df.count(),
-        "fact_rows": fact.count(),
-        "dim_store_rows": gold["dim_store"].count(),
-        "report_rows": report.count(),
-    }
-    print({"workdir": work, **counts})
-    return counts
+    return {k: v for k, v in out.items() if k.endswith("_rows")} | {"report_rows": report.count()}
 
 
 if __name__ == "__main__":
-    main(sys.argv[1] if len(sys.argv) > 1 else None)
+    print(main(sys.argv[1] if len(sys.argv) > 1 else None))

@@ -9,8 +9,10 @@ Reads staged Socrata CSV pages with the declared 24-column schema (no
 inference), runs bronze -> silver -> gold (SURVEY §3.1/§3.3: coercions
 C1-C3, star schema A1/A2/D1-D6, PK/FK validations J1/J2), writes each
 stage as parquet, and prints one JSON line of stage row counts and
-validation results. Exit code 1 if any PK/FK validation fails —
-the Spark stand-in for the reference's Postgres constraint errors.
+validation results. The counts and the PK/FK checks read each stage's
+parquet back rather than re-deriving it from the stage before. Exit code 1
+if any PK/FK validation fails — the Spark stand-in for the reference's
+Postgres constraint errors.
 """
 
 from __future__ import annotations
@@ -19,6 +21,8 @@ import argparse
 import json
 import sys
 import tempfile
+
+from pyspark.sql import functions as F
 
 from iowa_liquor_sales_spark import get_spark
 from iowa_liquor_sales_spark.plans.iowa import build_gold, silver, validate_gold
@@ -43,22 +47,19 @@ def run_pipeline(
 
     bronze = read_csv(spark, input_dir, IOWA_RAW_SCHEMA, header=True, null_value="\\N")
     write_parquet(bronze, f"{work}/bronze")
+    bronze = spark.read.parquet(f"{work}/bronze")
 
-    silver_df = silver(spark.read.parquet(f"{work}/bronze"))
-    write_parquet(silver_df, f"{work}/silver")
+    write_parquet(silver(bronze), f"{work}/silver")
+    silver_df = spark.read.parquet(f"{work}/silver")
 
-    gold = build_gold(spark.read.parquet(f"{work}/silver"))
+    gold = build_gold(silver_df)
     for name, df in gold.items():
-        part = (
-            ["year"]
-            if fact_partition_by_year and name == "fact_sales"
-            else None
-        )
-        if part:
-            from pyspark.sql import functions as F
-
+        part = None
+        if fact_partition_by_year and name == "fact_sales":
+            part = ["year"]
             df = df.withColumn("year", F.year("date"))
         write_parquet(df, f"{work}/gold/{name}", partition_by=part)
+    gold = {name: spark.read.parquet(f"{work}/gold/{name}") for name in gold}
 
     violations = validate_gold(gold)
     out = {

@@ -6,8 +6,8 @@ load (tests/test_transform.py:11, tests/test_load.py:14-16, and the
 Postgres PK/FK constraints). This module turns that style into engine
 surface: declarative expectations evaluated in ONE aggregate pass over the
 table (every rule is a conditional count inside the same scan — no
-rule-per-scan blowup at 100 TB), plus key/referential rules that need their
-own aggregate or anti-join.
+rule-per-scan blowup at 100 TB). Key and referential checks are
+``operators/joins.pk_duplicates`` and ``fk_violations``.
 """
 
 from __future__ import annotations
@@ -33,27 +33,6 @@ def rule_counts(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
 
 def not_null(col: str) -> Column:
     return F.col(col).isNotNull()
-
-
-def unique_violations(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Rows beyond the first per key (0 = key is unique)."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.coalesce(F.sum(F.col("n") - 1), F.lit(0)).alias("n_extra_rows"))
-    )
-
-
-def referential_violations(
-    child: DataFrame, parent: DataFrame, child_key: str, parent_key: str
-) -> DataFrame:
-    """Count of child rows with no parent (broadcast anti-join, one scan)."""
-    orphans = child.join(
-        broadcast(parent.select(parent_key).distinct()),
-        child[child_key] == parent[parent_key],
-        "left_anti",
-    )
-    return orphans.agg(F.count(F.lit(1)).alias("n_orphans"))
 
 
 def table_checksum(df: DataFrame, cols: list[str], null_token: str = "\\N") -> DataFrame:

@@ -15,9 +15,15 @@ Scale: bronze→silver is a single narrow stage; each dim build shuffles only
 its dim's distinct attribute tuples (tiny); the fact build is a projection.
 Gold tables should be written partitioned (fact by year) and the dims are
 broadcast at query time — see operators/joins.star_join.
+
+``validate_gold`` checks the gold tables it is given; the pipeline
+(``__main__.run_pipeline``) passes the written parquet read back, and
+counts each stage from its parquet, so neither re-derives a stage.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,7 +31,6 @@ from pyspark.sql import functions as F
 from iowa_liquor_sales_spark.functions.cleansing import to_silver
 from iowa_liquor_sales_spark.functions.dates import date_parts
 from iowa_liquor_sales_spark.operators.dedup import dedup_rank
-from iowa_liquor_sales_spark.operators.joins import fk_violations, pk_duplicates
 from iowa_liquor_sales_spark.schemas import IOWA_INT_COLS, IOWA_NUM_COLS
 
 # Dim column layouts: IowaLiquor-RDS.session.sql:85-156.
@@ -84,22 +89,6 @@ def _dim(df: DataFrame, key: str, cols: list[str]) -> DataFrame:
     return dedup_rank(distinct, [key], tiebreak or [key])
 
 
-def dim_store(silver_df: DataFrame) -> DataFrame:
-    return _dim(silver_df, "store", DIM_STORE_COLS)
-
-
-def dim_item(silver_df: DataFrame) -> DataFrame:
-    return _dim(silver_df, "itemno", DIM_ITEM_COLS)
-
-
-def dim_vendor(silver_df: DataFrame) -> DataFrame:
-    return _dim(silver_df, "vendor_no", DIM_VENDOR_COLS)
-
-
-def dim_category(silver_df: DataFrame) -> DataFrame:
-    return _dim(silver_df, "category", DIM_CATEGORY_COLS)
-
-
 def dim_date(silver_df: DataFrame) -> DataFrame:
     """session.sql:104-127 — day-trunc date + year/quarter/month + Postgres
     DOW + weekend flag, distinct over non-null dates."""
@@ -123,41 +112,60 @@ def fact_sales(silver_df: DataFrame) -> DataFrame:
 
 def build_gold(silver_df: DataFrame) -> dict[str, DataFrame]:
     return {
-        "dim_store": dim_store(silver_df),
-        "dim_item": dim_item(silver_df),
-        "dim_vendor": dim_vendor(silver_df),
-        "dim_category": dim_category(silver_df),
+        "dim_store": _dim(silver_df, "store", DIM_STORE_COLS),
+        "dim_item": _dim(silver_df, "itemno", DIM_ITEM_COLS),
+        "dim_vendor": _dim(silver_df, "vendor_no", DIM_VENDOR_COLS),
+        "dim_category": _dim(silver_df, "category", DIM_CATEGORY_COLS),
         "dim_date": dim_date(silver_df),
         "fact_sales": fact_sales(silver_df),
     }
 
 
+# Constraint checks (session.sql:67-73): fact_sales FK column -> its dim
+# and key, and PK check -> table and key.
+FK_CHECKS = {
+    "store": ("dim_store", "store"),
+    "itemno": ("dim_item", "itemno"),
+    "vendor_no": ("dim_vendor", "vendor_no"),
+    "category": ("dim_category", "category"),
+    "date": ("dim_date", "date"),
+}
+PK_CHECKS = {"pk_fact": ("fact_sales", "invoice_line_no")} | {
+    f"pk_{dim}": (dim, key) for dim, key in FK_CHECKS.values()
+}
+
+
+def _pk_check(gold: dict[str, DataFrame]) -> DataFrame:
+    """``(check, count)``: duplicated key groups, for checks with any."""
+    keyed = [
+        gold[table].select(F.lit(check).alias("check"), F.col(key).cast("string").alias("key"))
+        for check, (table, key) in PK_CHECKS.items()
+    ]
+    groups = reduce(DataFrame.unionByName, keyed).groupBy("check", "key").count()
+    return groups.filter(F.col("count") > 1).groupBy("check").count()
+
+
+def _fk_check(gold: dict[str, DataFrame]) -> DataFrame:
+    """One row: ``fk_<col>``, the fact rows whose non-NULL key has no dim row."""
+    fact = gold["fact_sales"]
+    for fk, (dim, key) in FK_CHECKS.items():
+        keys = gold[dim].select(F.col(key).alias(f"_{fk}")).distinct()
+        fact = fact.join(F.broadcast(keys), F.col(fk) == F.col(f"_{fk}"), "left")
+    orphan = {fk: F.col(fk).isNotNull() & F.col(f"_{fk}").isNull() for fk in FK_CHECKS}
+    return fact.agg(*[F.count_if(c).alias(f"fk_{fk}") for fk, c in orphan.items()])
+
+
 def validate_gold(gold: dict[str, DataFrame]) -> dict[str, int]:
     """PK/FK checks (reference J1/J2: Postgres constraints,
     session.sql:67-73). Returns violation counts — all zeros on a healthy
-    build. Each FK check is a broadcast anti-join: one fact scan, no
-    shuffle."""
-    fact = gold["fact_sales"]
-    out: dict[str, int] = {}
-    for name, keys in {
-        "pk_fact": ["invoice_line_no"],
-        "pk_dim_store": ["store"],
-        "pk_dim_item": ["itemno"],
-        "pk_dim_vendor": ["vendor_no"],
-        "pk_dim_category": ["category"],
-        "pk_dim_date": ["date"],
-    }.items():
-        table = gold["fact_sales" if name == "pk_fact" else name.removeprefix("pk_")]
-        out[name] = table.transform(lambda d, k=keys: pk_duplicates(d, k)).count()
-    for fk, (dim_name, dim_key) in {
-        "store": ("dim_store", "store"),
-        "itemno": ("dim_item", "itemno"),
-        "vendor_no": ("dim_vendor", "vendor_no"),
-        "category": ("dim_category", "category"),
-        "date": ("dim_date", "date"),
-    }.items():
-        violations = fk_violations(
-            fact.filter(F.col(fk).isNotNull()), gold[dim_name], fk, dim_key
-        )
-        out[f"fk_{fk}"] = violations.count()
-    return out
+    build: per PK, the number of duplicated key groups; per FK, the number
+    of fact rows whose non-NULL key has no dim row.
+
+    Two actions: one aggregate over every table's keys (``_pk_check``) and
+    one broadcast pass over the fact (``_fk_check``). The dim key sets are
+    DISTINCT because the FK joins are chained: a duplicated dim key would
+    otherwise fan out fact rows, and an orphan on another FK would count
+    once per copy. Pass the tables as written (read back from parquet), so
+    that the checks do not re-derive them."""
+    pk = {r["check"]: r["count"] for r in _pk_check(gold).collect()}
+    return {c: pk.get(c, 0) for c in PK_CHECKS} | _fk_check(gold).first().asDict()

@@ -12,7 +12,7 @@ def test_iowa_pipeline_end_to_end(spark, tmp_path):
 
     counts = main(str(tmp_path / "iowa"))
     assert counts["bronze_rows"] == counts["silver_rows"] == 5000
-    assert counts["fact_rows"] == 5000  # unique invoice PKs preserved
+    assert counts["fact_sales_rows"] == 5000  # unique invoice PKs preserved
     assert counts["dim_store_rows"] == 40
     assert counts["report_rows"] > 0
 

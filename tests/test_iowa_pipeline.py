@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from iowa_liquor_sales_spark.operators.joins import fk_violations, pk_duplicates
 from iowa_liquor_sales_spark.plans.iowa import (
+    FK_CHECKS,
+    PK_CHECKS,
     build_gold,
     fact_sales,
     silver,
@@ -88,13 +90,7 @@ def test_gold_dims_and_fact(bronze):
     s = silver(bronze)
     gold = build_gold(s)
     # Dim keys unique & non-null (ON CONFLICT DO NOTHING semantics).
-    for name, key in [
-        ("dim_store", "store"),
-        ("dim_item", "itemno"),
-        ("dim_vendor", "vendor_no"),
-        ("dim_category", "category"),
-        ("dim_date", "date"),
-    ]:
+    for name, key in FK_CHECKS.values():
         d = gold[name]
         assert d.filter(F.col(key).isNull()).count() == 0, name
         assert d.groupBy(key).count().filter("count > 1").count() == 0, name
@@ -113,37 +109,14 @@ def test_gold_dims_and_fact(bronze):
     )
 
 
-def test_gold_validations_pass(bronze):
-    gold = build_gold(silver(bronze))
-    results = validate_gold(gold)
-    assert all(v == 0 for v in results.values()), results
-
-
-PK_KEYS = {
-    "pk_fact": ("fact_sales", "invoice_line_no"),
-    "pk_dim_store": ("dim_store", "store"),
-    "pk_dim_item": ("dim_item", "itemno"),
-    "pk_dim_vendor": ("dim_vendor", "vendor_no"),
-    "pk_dim_category": ("dim_category", "category"),
-    "pk_dim_date": ("dim_date", "date"),
-}
-FK_KEYS = {
-    "store": ("dim_store", "store"),
-    "itemno": ("dim_item", "itemno"),
-    "vendor_no": ("dim_vendor", "vendor_no"),
-    "category": ("dim_category", "category"),
-    "date": ("dim_date", "date"),
-}
-
-
 def _per_check_reference(gold) -> dict[str, int]:
     """One action per constraint, through the registry's own operators."""
     out = {
         check: pk_duplicates(gold[table], [key]).count()
-        for check, (table, key) in PK_KEYS.items()
+        for check, (table, key) in PK_CHECKS.items()
     }
     fact = gold["fact_sales"]
-    for fk, (dim, key) in FK_KEYS.items():
+    for fk, (dim, key) in FK_CHECKS.items():
         live = fact.filter(F.col(fk).isNotNull())
         out[f"fk_{fk}"] = fk_violations(live, gold[dim], fk, key).count()
     return out
@@ -151,45 +124,39 @@ def _per_check_reference(gold) -> dict[str, int]:
 
 @pytest.fixture(scope="module")
 def broken_gold(bronze):
-    """Gold with one violation of each kind injected: a duplicated fact PK,
-    a duplicated dim_store key, an orphan store FK, an orphan date FK on a
-    row whose store is the duplicated dim key (so a fan-out of fact rows
-    would double-count it), and a NULL store FK (not a violation)."""
+    """Gold with injected violations: a duplicated fact PK, a duplicated
+    dim_store key (S1), an orphan store FK, an orphan date FK on a row whose
+    store is S1 (a fan-out of fact rows would count it twice), and a NULL
+    store FK (not a violation)."""
     gold = build_gold(silver(bronze))
     fact, stores = gold["fact_sales"], gold["dim_store"]
     row = fact.filter(F.col("invoice_line_no") == "INV-00001")
-    assert row.select("store").first()["store"] == "S1"
-    gold["fact_sales"] = fact.unionByName(row).unionByName(
-        row.withColumn("invoice_line_no", F.lit("INJ-store"))
-        .withColumn("store", F.lit("S-orphan"))
-    ).unionByName(
-        row.withColumn("invoice_line_no", F.lit("INJ-date"))
-        .withColumn("date", F.lit("1999-12-31").cast("date"))
-    ).unionByName(
-        row.withColumn("invoice_line_no", F.lit("INJ-null"))
-        .withColumn("store", F.lit(None).cast("string"))
-    )
-    gold["dim_store"] = stores.unionByName(
-        stores.filter(F.col("store") == "S1").withColumn("name", F.lit("Store 1 dup"))
-    )
-    return gold
+    assert row.first()["store"] == "S1"
+    for inv, col, value in [
+        ("INJ-store", "store", F.lit("S-orphan")),
+        ("INJ-date", "date", F.lit("1999-12-31").cast("date")),
+        ("INJ-null", "store", F.lit(None).cast("string")),
+    ]:
+        fact = fact.unionByName(row.withColumn("invoice_line_no", F.lit(inv)).withColumn(col, value))
+    dup = stores.filter(F.col("store") == "S1").withColumn("name", F.lit("Store 1 dup"))
+    return {**gold, "fact_sales": fact.unionByName(row), "dim_store": stores.unionByName(dup)}
 
 
-def test_validate_gold_matches_per_check_reference(bronze, broken_gold):
+def test_validate_gold_matches_per_check_reference(spark, bronze, broken_gold):
     clean = build_gold(silver(bronze))
-    want_clean = _per_check_reference(clean)
-    assert validate_gold(clean) == want_clean
-    assert set(want_clean.values()) == {0}
-
-    want = _per_check_reference(broken_gold)
-    assert want == {
-        **{k: 0 for k in want_clean},
-        "pk_fact": 1,
-        "pk_dim_store": 1,
-        "fk_store": 1,
-        "fk_date": 1,
-    }
-    assert validate_gold(broken_gold) == want
+    zeros = dict.fromkeys([*PK_CHECKS, *(f"fk_{fk}" for fk in FK_CHECKS)], 0)
+    assert validate_gold(clean) == _per_check_reference(clean) == zeros
+    sc, got, jobs = spark.sparkContext, {}, {}
+    for group, checks in [("reference", _per_check_reference), ("fused", validate_gold)]:
+        sc.setJobGroup(group, group)
+        got[group] = checks(broken_gold)
+        jobs[group] = len(sc.statusTracker().getJobIdsForGroup(group))
+    for prop in ("spark.jobGroup.id", "spark.job.description"):
+        sc.setLocalProperty(prop, None)
+    want = {**zeros, "pk_fact": 1, "pk_dim_store": 1, "fk_store": 1, "fk_date": 1}
+    assert got["reference"] == got["fused"] == want
+    # The fused checks launch fewer Spark jobs than one action per check.
+    assert 0 < jobs["fused"] < jobs["reference"], jobs
 
 
 def test_dim_date_pg_dow_convention(spark):
@@ -207,28 +174,25 @@ def test_dim_date_pg_dow_convention(spark):
     assert not rows["2026-08-12"]["is_weekend"]
 
 
-def test_cli_pipeline_end_to_end(spark, tmp_path):
-    import sys
+def test_cli_pipeline_end_to_end(spark, tmp_path, capsys):
+    import json
 
-    sys.path.insert(0, "examples")
     from examples.run_iowa_pipeline import stage_sample_pages
 
     from iowa_liquor_sales_spark.__main__ import main
 
-    pages = str(tmp_path / "pages")
+    pages, wh = str(tmp_path / "pages"), tmp_path / "wh"
     stage_sample_pages(spark, pages, n_rows=2000)
-    rc = main(
-        [
-            "pipeline",
-            "--input",
-            pages,
-            "--workdir",
-            str(tmp_path / "wh"),
-            "--fact-partition-by-year",
-        ]
-    )
-    assert rc == 0
-    fact = spark.read.parquet(str(tmp_path / "wh/gold/fact_sales"))
-    assert fact.count() == 2000
+    capsys.readouterr()
+    assert main(["pipeline", "--input", pages, "--workdir", str(wh), "--fact-partition-by-year"]) == 0
+    out = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert set(out["violations"].values()) == {0}, out["violations"]
+    # Every printed count is the row count of the parquet that stage wrote.
+    stages = ["bronze", "silver", *(f"gold/{table}" for table, _ in PK_CHECKS.values())]
+    written = {f"{s.removeprefix('gold/')}_rows": spark.read.parquet(str(wh / s)) for s in stages}
+    assert {k: v for k, v in out.items() if k.endswith("_rows")} == {
+        k: df.count() for k, df in written.items()
+    }
+    assert out["fact_sales_rows"] == 2000
     # hive partitioning materialized: year appears as a partition column
-    assert "year" in fact.columns
+    assert "year" in written["fact_sales_rows"].columns
